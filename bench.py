@@ -92,7 +92,7 @@ def bench_streaming(spark, sf_dir: str) -> dict:
     shape (maxFilesPerTrigger forces several micro-batches over a
     time-ordered source, like daily increments arriving in order) under
     both sinks: the unbounded full-table MERGE, whose per-batch cost grows
-    with the target, vs the bounded `commit="manifest"` partition-scoped
+    with the target, vs the bounded `partition_col="day"` manifest
     MERGE, whose per-batch cost is ∝ the partitions that batch touches
     (touched counts read back from the manifest commits themselves)."""
     import shutil
@@ -197,7 +197,7 @@ def bench_streaming(spark, sf_dir: str) -> dict:
         )
         inc_mfpt = 2  # 8 files / 2 per trigger = 4 micro-batches
 
-        def run_incremental(tag: str, commit: str | None):
+        def run_incremental(tag: str, manifest: bool):
             target = os.path.join(work, f"inc_target_{tag}")
             t0 = time.time()
             stream = structured.read_event_stream(
@@ -209,8 +209,7 @@ def bench_streaming(spark, sf_dir: str) -> dict:
                 ["event_id"],
                 os.path.join(work, f"inc_ckpt_{tag}"),
                 transform=transform,
-                partition_col="day" if commit else None,
-                commit=commit or "rename",
+                partition_col="day" if manifest else None,
                 # event_id → day is functional by construction (day is
                 # derived from the keyed row); skip the untouched-
                 # partition key scan that grows with table size
@@ -240,8 +239,8 @@ def bench_streaming(spark, sf_dir: str) -> dict:
         # which is wider than the deltas this block exists to measure.
         full_runs, man_runs = [], []
         for rep in range(3):
-            full_runs.append(run_incremental(f"full_{rep}", None))
-            man_runs.append(run_incremental(f"manifest_{rep}", "manifest"))
+            full_runs.append(run_incremental(f"full_{rep}", False))
+            man_runs.append(run_incremental(f"manifest_{rep}", True))
         full_runs.sort(key=lambda r: r[0])
         man_runs.sort(key=lambda r: r[0])
         full_sec, full_nb, full_durs, full_in, _ = full_runs[1]

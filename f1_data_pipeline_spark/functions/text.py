@@ -34,6 +34,18 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokens(col))
 
 
+def _estimated_splits(df) -> int:
+    """Scan splits of `spark.sql.files.maxPartitionBytes` each that `df`'s
+    estimated output size fills (optimizer statistics), 1 when the size is
+    unknown. Metadata only: `df.rdd.getNumPartitions()` would instead run
+    every shuffle stage under `df` when AQE is on, before any action."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if size >= conf.defaultSizeInBytes():
+        return 1
+    return -(-size // conf.filesMaxPartitionBytes())
+
+
 def positional_ngrams(df, id_col: str, text_col: str, n: int, spread: bool = True):
     """(id_col, pos, ngram) rows: the codegen'd posexplode + window-lead
     shingler shared by minhash, contamination, and duplicate-span dedup.
@@ -73,7 +85,7 @@ def positional_ngrams(df, id_col: str, text_col: str, n: int, spread: bool = Tru
         # splits and this keeps that granularity); raise degenerate layouts
         # to at least one partition per core.
         n_parts = max(
-            base.rdd.getNumPartitions(),
+            _estimated_splits(base),
             df.sparkSession.sparkContext.defaultParallelism,
         )
         base = base.repartition(n_parts, F.col(id_col))

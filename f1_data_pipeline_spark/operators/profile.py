@@ -31,7 +31,9 @@ def profile_long(
     distinct_strategy: str = "set",
 ) -> DataFrame:
     """Per-column stats as (col_name, stat, value): n_rows (once, under
-    col_name='*'), and n_nulls / null_frac / n_distinct per column.
+    col_name='*'), and n_nulls / null_frac / n_distinct per column. On an
+    empty frame null_frac is NULL (no rows to take a fraction of) and
+    n_distinct is 0 under every strategy.
 
     `approx_distinct=True` is the 100 TB path: HLL sketches instead of any
     exact strategy (one less shuffle amplification; ±2% error).
@@ -72,14 +74,16 @@ def profile_long(
             # while count_distinct groups NaNs together and merges -0.0
             # into 0.0. Normalize: -0.0 + 0.0 == 0.0 (IEEE 754), NaNs
             # leave the set entirely (→ null, which collect_set drops)
-            # and come back as one max(isnan) flag.
+            # and come back as one max(isnan) flag (NULL over zero rows,
+            # hence the coalesce).
             set_part = F.size(
                 F.collect_set(
                     F.when(F.isnan(v), F.lit(None)).otherwise(v + F.lit(0.0))
                 )
             )
-            return set_part + F.max(
-                F.coalesce(F.isnan(v), F.lit(False)).cast("int")
+            return set_part + F.coalesce(
+                F.max(F.coalesce(F.isnan(v), F.lit(False)).cast("int")),
+                F.lit(0),
             )
 
     elif distinct_strategy == "expand":
@@ -99,7 +103,7 @@ def profile_long(
         parts += [
             f"'{c}'", "'n_nulls'", f"CAST(__nulls_{c} AS DOUBLE)",
             f"'{c}'", "'null_frac'",
-            f"ROUND(CAST(__nulls_{c} AS DOUBLE) / __n_rows, 6)",
+            f"ROUND(CAST(__nulls_{c} AS DOUBLE) / NULLIF(__n_rows, 0), 6)",
             f"'{c}'", "'n_distinct'", f"CAST(__dist_{c} AS DOUBLE)",
         ]
     n = 1 + 3 * len(cols)

@@ -11,10 +11,11 @@ the reference's two core guarantees:
 - all-or-nothing per table (loaders/__init__.py:108-113) — a crashed write
   never leaves a half-table behind.
 
-Scale notes: at 100 TB, overwrite amplification is bounded by partitioning
-facts on a stable key (season/date) and rewriting only touched partitions —
-`merge_upsert` takes `partition_by` for exactly that. On a real deployment
-the same dataflow drops into Delta/Iceberg `MERGE INTO` unchanged.
+Tables merged partition by partition, or read by version, are manifest
+tables (`merge_upsert_manifest` and the verbs beside it): a MERGE rewrites
+only the partitions its batch touches and commits them all with one atomic
+manifest creation. On a real deployment the same dataflow drops into
+Delta/Iceberg `MERGE INTO` unchanged.
 """
 
 from __future__ import annotations
@@ -382,9 +383,8 @@ def compact(
     too few files to split. A partitionBy-laid-out table is detected from
     its `name=value` directories and its layout preserved even when
     `partition_by` is not passed (a flat rewrite would keep the data but
-    destroy the directory scheme — and with it partition pruning and the
-    partition-scoped MERGE path). Returns {files_before, files_after,
-    bytes, partition_by}.
+    destroy the directory scheme — and with it partition pruning).
+    Returns {files_before, files_after, bytes, partition_by}.
     """
     import glob as _glob
 
@@ -417,241 +417,23 @@ def compact(
 
 
 # ---------------------------------------------------------------------------
-# versioned snapshots — write_atomic keeps only the current state; these
-# give the Delta-style properties a warehouse needs on plain parquet:
-# snapshot isolation via an atomically-swapped pointer, time travel,
-# rollback, and retention vacuum
-# ---------------------------------------------------------------------------
-
-_VERSIONS_DIR = "_versions"
-_LATEST_FILE = "_LATEST"
-
-
-def _version_path(path: str, v: int) -> str:
-    return os.path.join(path, _VERSIONS_DIR, f"v{v:08d}")
-
-
-def latest_version(path: str) -> int | None:
-    ptr = os.path.join(path, _LATEST_FILE)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as fh:
-        return int(fh.read().strip())
-
-
-def write_versioned(
-    df: DataFrame, path: str, partition_by: Sequence[str] | None = None
-) -> int:
-    """Write a new immutable snapshot version and atomically advance the
-    pointer. Readers resolving the pointer before the swap keep reading
-    the old snapshot (snapshot isolation); nothing is deleted here."""
-    v = (latest_version(path) or 0) + 1
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(_version_path(path, v))
-    tmp = os.path.join(path, f".{_LATEST_FILE}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(v))
-    os.replace(tmp, os.path.join(path, _LATEST_FILE))  # atomic pointer swap
-    return v
-
-
-def read_versioned(
-    spark: SparkSession, path: str, version: int | None = None
-) -> DataFrame:
-    """Read the latest snapshot, or any retained historical `version`."""
-    v = version if version is not None else latest_version(path)
-    if v is None:
-        raise FileNotFoundError(f"no versions at {path}")
-    return spark.read.parquet(_version_path(path, v))
-
-
-def rollback(path: str, version: int) -> None:
-    """Point the table back at an earlier snapshot (pure pointer move —
-    the bad version stays on disk for forensics until vacuumed)."""
-    if not os.path.isdir(_version_path(path, version)):
-        raise FileNotFoundError(f"version {version} not retained at {path}")
-    tmp = os.path.join(path, f".{_LATEST_FILE}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(tmp, os.path.join(path, _LATEST_FILE))
-
-
-def vacuum(path: str, keep_last: int = 2) -> list[int]:
-    """Drop snapshots older than the newest `keep_last`, never the one the
-    pointer targets. Returns removed version numbers."""
-    base = os.path.join(path, _VERSIONS_DIR)
-    if not os.path.isdir(base):
-        return []
-    versions = sorted(int(d[1:]) for d in os.listdir(base) if d.startswith("v"))
-    current = latest_version(path)
-    removable = [
-        v for v in versions[:-keep_last] if keep_last and v != current
-    ] if keep_last else []
-    for v in removable:
-        shutil.rmtree(_version_path(path, v), ignore_errors=True)
-    return removable
-
-
-def merge_upsert_partitioned(
-    spark: SparkSession,
-    updates: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    partition_col: str,
-    check_moved_keys: bool = True,
-) -> int:
-    """MERGE that rewrites ONLY the partitions the update batch touches.
-
-    The plain `merge_upsert` reads and rewrites the whole table — at
-    100 TB with a daily increment touching one date partition, that is
-    ~everything rewritten for ~nothing changed. Here: collect the update
-    batch's distinct partition values (small — one driver-side list),
-    read just those partitions (partition pruning), merge, and swap in the
-    rewritten partition directories one atomic rename each, so untouched
-    partition directories are never rewritten. Rewrite amplification drops
-    from O(table) to O(touched partitions).
-
-    Requires `partition_col` ∈ update columns and the target laid out
-    `partitionBy(partition_col)`. Correctness preconditions, enforced here:
-
-    - NULL partition values can't be merged partition-scoped (a NULL never
-      equals the pruning predicate, so existing __HIVE_DEFAULT_PARTITION__
-      rows would be dropped from the merge input and then overwritten) —
-      such batches fall back to the full-table `merge_upsert`.
-    - `keys` must functionally determine `partition_col`: an update whose
-      key already lives under a DIFFERENT partition value would insert a
-      second row instead of updating. The batch itself is always validated
-      (cheap — batch-sized aggregate); `check_moved_keys=True` additionally
-      scans the untouched partitions' key columns (column-pruned, far
-      cheaper than the full rewrite this operator avoids) and raises if any
-      update key already exists elsewhere.
-
-    COMMIT CONTRACT — LOCAL FILESYSTEM ONLY: the per-partition swap relies
-    on atomic directory rename, which object stores (S3/GCS) do not have —
-    a "rename" there is copy+delete per object and a crash mid-swap leaves
-    a torn partition. On object-store targets use `merge_upsert_manifest`,
-    which commits by atomically replacing a single manifest object (PUT is
-    atomic per object) and never renames data files.
-
-    CROSS-PARTITION ATOMICITY: atomicity here is PER PARTITION, not per
-    batch. The swap loop below renames one touched partition directory at a
-    time, so a crash mid-loop leaves already-swapped partitions on the new
-    state and the rest on the old — every partition individually consistent
-    (wholly old or wholly new, never torn), but the batch as a whole
-    half-applied until the merge is re-run (it is idempotent). Within ONE
-    partition's swap there is additionally a narrow two-rename window (old
-    dir parked, new dir not yet renamed in) where a crash leaves that
-    partition absent until the parked `.__old__` directory is restored by
-    hand. A multi-partition batch that needs all-or-nothing visibility
-    ACROSS its partitions must go through `merge_upsert_manifest`, whose
-    single manifest flip commits every touched partition at once and has
-    neither window.
-    """
-    parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    if not parts:
-        return 0
-    if any(p is None for p in parts):
-        # NULL partition → partition-scoped pruning is unsound; full merge
-        # keeps MERGE semantics at full-rewrite cost.
-        return merge_upsert(spark, updates, path, keys, partition_by=[partition_col])
-    dup_keyed = (
-        updates.groupBy(*keys)
-        .agg(F.countDistinct(partition_col).alias("__np"))
-        .filter(F.col("__np") > 1)
-        .limit(1)
-        .count()
-    )
-    if dup_keyed:
-        raise ValueError(
-            f"update batch maps one {keys} key to multiple {partition_col} "
-            "values — keys must functionally determine the partition column "
-            "for partition-scoped MERGE"
-        )
-    if not _table_exists(path):
-        write_atomic(updates, path, partition_by=[partition_col])
-        return updates.count()
-
-    table_cols = spark.read.parquet(path).columns
-    new_cols = [c for c in updates.columns if c not in table_cols]
-    if new_cols:
-        raise ValueError(
-            f"update batch adds columns {new_cols}, but a Hive-layout "
-            "partition-scoped MERGE cannot evolve schema (touched "
-            "partitions would get new-schema files while untouched ones "
-            "keep the old — plain parquet readers see whichever footer "
-            "they sample first). Use merge_upsert(schema_evolution=True) "
-            "(full rewrite) or a manifest table "
-            "(merge_upsert_manifest(schema_evolution=True), which stores "
-            "the schema as metadata)."
-        )
-
-    if check_moved_keys:
-        elsewhere = (
-            spark.read.parquet(path)
-            .filter(~F.col(partition_col).isin(parts))
-            .select(*keys)
-            .join(updates.select(*keys).distinct(), list(keys), "left_semi")
-            .limit(1)
-            .count()
-        )
-        if elsewhere:
-            raise ValueError(
-                f"update keys already exist under other {partition_col} "
-                "partitions — a partition-scoped MERGE would duplicate them; "
-                "use the full merge_upsert (or fix the partition assignment)"
-            )
-
-    existing_touched = _align_schema(
-        spark.read.parquet(path).filter(F.col(partition_col).isin(parts)), updates
-    )
-    merged = merge_upsert_frames(existing_touched, updates, keys)
-    n = updates.count()
-
-    # Stage the merged partitions in a temp table, then swap each touched
-    # partition directory with one rename (old dir backed up → new dir in).
-    # A crash leaves every partition wholly old or wholly new — the same
-    # guarantee write_atomic gives whole tables, scoped per partition
-    # (dynamic partition overwrite would rewrite the directory in place).
-    stage = f"{path}.__merge__{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
-    try:
-        for entry in os.listdir(stage):
-            if not entry.startswith(f"{partition_col}="):
-                continue
-            src = os.path.join(stage, entry)
-            dst = os.path.join(path, entry)
-            backup = None
-            if os.path.exists(dst):
-                # park the old dir OUTSIDE the table root: a `name=value.x`
-                # sibling inside it would list as a bogus partition value
-                backup = f"{path}.__old__{uuid.uuid4().hex[:8]}"
-                os.rename(dst, backup)
-            os.rename(src, dst)
-            if backup:
-                shutil.rmtree(backup, ignore_errors=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    return n
-
-
-# ---------------------------------------------------------------------------
-# manifest-committed tables — the object-store-safe MERGE path.
-#
-# `merge_upsert_partitioned` commits by renaming partition directories, which
-# is atomic on POSIX but copy+delete (torn on crash) on S3/GCS. Manifest
-# tables use the Iceberg/Delta commit model instead, reduced to its minimum:
+# manifest-committed tables — the engine's one format for tables merged
+# partition by partition or read by version (the whole-table overwrite
+# writers above rewrite everything on every write and keep no history). It
+# is the Iceberg/Delta commit model, reduced to its minimum:
 #
 #   <path>/_commits/vNNNNNNNN.json        numbered manifests = table state
-#   <path>/data/<part>/<snap>/*.parquet   immutable prefixes, never renamed
+#   <path>/data/<part>/<snap>/*.parquet   immutable prefixes, never rewritten
 #
-# A MERGE writes the touched partitions' merged data to FRESH prefixes (data
-# files land at their final names — no post-write rename anywhere), then
-# commits by atomically creating the next numbered manifest object. A
-# crash at ANY earlier point leaves only unreferenced garbage prefixes that
-# `vacuum_manifest` reclaims; readers resolving the manifest see wholly-old
-# or wholly-new state, never a torn partition.
+# A MERGE writes the touched partitions' merged data to FRESH prefixes that
+# no manifest references yet, then commits by atomically creating the next
+# numbered manifest object — one commit for every touched partition, so a
+# batch is all-or-nothing across partitions and no committed data file is
+# ever renamed (object-store safe). A crash at ANY earlier point leaves only
+# unreferenced garbage prefixes that `vacuum_manifest` reclaims; readers
+# resolving the manifest see wholly-old or wholly-new state, never a torn
+# partition. Every retained manifest is a snapshot: `read_manifest_table
+# (version=)` time-travels, `restore_manifest` rolls back by metadata only.
 #
 # The partition column is kept as a REGULAR data column (parquet RLE makes
 # the duplication ~free) and its per-partition value recorded in the
@@ -2985,19 +2767,36 @@ def merge_upsert_manifest(
     rolling back.
 
     `bloom_cols` names high-cardinality columns to index with a
-    per-partition bloom sidecar at commit time (one extra aggregation of
-    the already-cached merge frame per touched partition) — point lookups
+    per-partition bloom sidecar at commit time (one extra aggregation job
+    over the cached merge frame, for all touched partitions) — point lookups
     then prune partitions via `manifest_bloom_lookup` /
     `read_manifest_point_lookup` without touching data. Use for the keys
     a consumer probes by equality (doc ids, event ids); range predicates
     belong to the min/max stats + clustering instead.
 
-    Same semantics and preconditions as `merge_upsert_partitioned` (update
-    rows win, unmatched insert, untouched partitions untouched; `keys` must
-    functionally determine `partition_col`) — but commit is one atomic
-    manifest-object creation instead of N directory renames, so a crash
-    anywhere mid-write leaves readers on the old snapshot with zero torn
-    state. Concurrent writers get optimistic concurrency at partition
+    Semantics: update rows win per column, unmatched update rows insert,
+    and rows of partitions the batch does not touch are neither read nor
+    rewritten. Update rows sharing a key collapse to one. Returns the
+    number of distinct update keys (-1 with `count_rows=False`).
+
+    Preconditions, each enforced with a `ValueError` before any data is
+    written:
+
+    - `partition_col` (a transform's source column) is in the batch, and an
+      existing table is manifest-partitioned by the same spec;
+    - `keys` functionally determine `partition_col`: a batch that maps one
+      key to two partition values (NULL counts as a value) is refused, and
+      with `check_moved_keys=True` so is a batch key that already lives in
+      an untouched partition (a key-column scan of those partitions only);
+    - new columns and widened column types need `schema_evolution=True`;
+      any other type change is refused.
+
+    NULL partition values need no fallback: pruning is manifest-key
+    selection, not an `isin` predicate, so NULL is just another entry.
+
+    One atomic manifest creation commits every touched partition, so a
+    crash anywhere mid-write leaves readers on the old snapshot with zero
+    torn state. Concurrent writers get optimistic concurrency at partition
     granularity: a lost commit race against writers that touched DISJOINT
     partitions rebases automatically (their entries + ours, schemas
     unioned, key-spanning re-checked — up to `max_commit_retries` times,
@@ -3007,14 +2806,14 @@ def merge_upsert_manifest(
     Many independent ingest jobs can therefore commit to one table
     concurrently as long as they own different partition slices — the
     normal 100 TB multi-writer layout.
-    NULL partition values need no fallback here: pruning is manifest-key
-    selection, not a Hive `isin` predicate, so NULL is just another entry.
 
-    Writes one job per TOUCHED partition (the batch's distinct partition
-    values — by design a handful for an incremental load; the merged frame
-    is persisted so each job is a filter over cached rows, not a recompute).
-    Old prefixes stay on disk for snapshot-isolated in-flight readers until
-    `vacuum_manifest` reclaims them.
+    One fused Spark job writes every touched partition's fresh prefix
+    (`_write_partition_prefixes`), computing the merge exactly once. The
+    merged frame is cached only when something reads it more than once:
+    table CHECK constraints, bloom sidecars, or a sort-on-write layout
+    (which writes one job per touched partition). Old prefixes stay on
+    disk for snapshot-isolated in-flight readers until `vacuum_manifest`
+    reclaims them.
 
     Reference parity: same ON CONFLICT DO UPDATE contract as the reference's
     loaders (loaders/__init__.py:253-273), with the all-or-nothing guarantee

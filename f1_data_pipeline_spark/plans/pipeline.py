@@ -39,10 +39,6 @@ class PipelineSpec:
     extract: Callable[..., DataFrame]
     dependencies: tuple[str, ...] = ()
     keys: Sequence[str] | None = None  # defaults to schemas.NATURAL_KEYS
-    # when set, INCREMENTAL loads use the partition-scoped MERGE: only the
-    # partitions present in the batch are rewritten (sinks.py) — the shape
-    # that bounds rewrite amplification at warehouse scale
-    partition_col: str | None = None
 
     def resolved_keys(self) -> list[str]:
         return list(self.keys or NATURAL_KEYS[self.name])
@@ -121,10 +117,6 @@ class Pipeline:
             path = self.table_path(name)
             if spec.strategy == FULL_REFRESH:
                 n = sinks.insert_ignore(self.spark, df, path, keys)
-            elif spec.partition_col is not None:
-                n = sinks.merge_upsert_partitioned(
-                    self.spark, df, path, keys, spec.partition_col
-                )
             else:
                 n = sinks.merge_upsert(self.spark, df, path, keys)
             dt_s = time.time() - t0

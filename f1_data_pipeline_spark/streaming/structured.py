@@ -93,11 +93,11 @@ def start_merge_sink(
     checkpoint_dir: str,
     transform: Callable[[DataFrame], DataFrame] | None = None,
     partition_col: str | None = None,
-    commit: str = "rename",
+    commit: str = "manifest",
     check_moved_keys: bool = True,
 ) -> StreamingQuery:
     """Exactly-once-effect sink: per micro-batch, MERGE the batch into the
-    target Parquet table keyed on `keys` (reference upsert semantics A7;
+    target table keyed on `keys` (reference upsert semantics A7;
     idempotent under micro-batch replay because MERGE is).
 
     Rewrite amplification is the scale hazard of a streaming MERGE into
@@ -105,14 +105,11 @@ def start_merge_sink(
     O(table) per micro-batch, so an N-batch run costs N table rewrites
     (measured ~N× the one-batch plan, SCALE_NOTES "Streaming vs batch").
     Pass `partition_col` (e.g. the event date every batch naturally
-    clusters on) to bound each micro-batch to its touched partitions:
-
-    - commit="rename" → `merge_upsert_partitioned` (atomic directory
-      renames; local/HDFS filesystems);
-    - commit="manifest" → `merge_upsert_manifest` (immutable prefixes +
-      one atomic manifest-object flip; the object-store-safe choice —
-      read the target back with `read_manifest_table`, not a plain
-      parquet read).
+    clusters on) to bound each micro-batch to its touched partitions: the
+    target is then a manifest table written by `merge_upsert_manifest`
+    (immutable prefixes + one atomic manifest-object flip per batch) —
+    read it back with `read_manifest_table`, not a plain parquet read.
+    `commit` accepts only "manifest", the one partitioned commit protocol.
 
     `check_moved_keys=False` skips the guard scan of UNTOUCHED partitions'
     key columns (the one per-batch cost that grows with table size, not
@@ -121,11 +118,9 @@ def start_merge_sink(
     is derived from the keyed row itself (day = to_date(ts) for a unique
     event_id); leave it on for feeds that may re-assign keys.
     """
-    if commit not in ("rename", "manifest"):
+    if commit != "manifest":
         raise ValueError(f"unknown commit mode {commit!r}")
-    if commit == "manifest" and partition_col is None:
-        raise ValueError("commit='manifest' requires partition_col")
-    if commit == "manifest":
+    if partition_col is not None:
         # pre-warm the manifest commit path's lazy imports BEFORE the
         # first micro-batch: the footer-stats reader (pyarrow.parquet)
         # alone costs several hundred ms of import time, which otherwise
@@ -138,16 +133,11 @@ def start_merge_sink(
         out = transform(batch_df) if transform is not None else batch_df
         if partition_col is None:
             sinks.merge_upsert(out.sparkSession, out, target_path, list(keys))
-        elif commit == "manifest":
+        else:
             sinks.merge_upsert_manifest(
                 out.sparkSession, out, target_path, list(keys), partition_col,
                 check_moved_keys=check_moved_keys,
                 count_rows=False,  # foreachBatch discards the return value
-            )
-        else:
-            sinks.merge_upsert_partitioned(
-                out.sparkSession, out, target_path, list(keys), partition_col,
-                check_moved_keys=check_moved_keys,
             )
 
     return (

@@ -932,3 +932,21 @@ def test_maintain_ivf_index_drift_rebuild(spark, tmp_path):
     row = st.first()
     assert row.added_since_rebuild == 0 and row.rebuilds == 2
     assert spark.read.parquet(f"{idx}/cells").count() == 120
+
+
+def test_positional_ngrams_builds_without_running_jobs(spark):
+    """Building the shingle frame is lazy even over a shuffled input: the
+    spread partition count comes from plan statistics, not from `.rdd`,
+    which would run the input's shuffle stages under AQE."""
+    from f1_data_pipeline_spark.functions.text import positional_ngrams
+
+    sc = spark.sparkContext
+    shuffled = _docs(spark).groupBy("doc_id").agg(F.first("text").alias("text"))
+    group = "positional-ngrams-lazy"
+    sc.setJobGroup(group, "build only")
+    try:
+        grams = positional_ngrams(shuffled, "doc_id", "text", 3)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc._jsc.clearJobGroup()
+    assert grams.filter(F.col("doc_id") == 3).count() == 4  # 6 tokens → 4 grams

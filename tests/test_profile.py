@@ -82,6 +82,17 @@ def test_distinct_strategies_agree_on_float_edge_cases(spark):
     assert b[("v", "n_distinct")] == 3.0  # {NaN, 0.0, 1.5}
     assert b[("k", "n_distinct")] == 3.0
 
+    # zero rows: no division by zero under ANSI mode, null_frac NULL, and
+    # n_distinct 0 (the set strategy's NaN flag is a max over no rows)
+    empty = spark.createDataFrame([], "v double, k int")
+    a = _stats(P.profile_long(empty, distinct_strategy="expand"))
+    b = _stats(P.profile_long(empty, distinct_strategy="set"))
+    assert a == b
+    assert b[("*", "n_rows")] == 0.0
+    for c in ("v", "k"):
+        assert b[(c, "null_frac")] is None
+        assert b[(c, "n_distinct")] == 0.0
+
 
 def test_set_strategy_has_no_expand(spark, sf_dir):
     from f1_data_pipeline_spark.sources import load_table

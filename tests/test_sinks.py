@@ -149,65 +149,6 @@ def test_compact_small_files(spark, tmp_path):
     assert stats["files_after"] < before and stats["files_after"] <= 2
 
 
-def test_versioned_snapshots_time_travel_rollback_vacuum(spark, tmp_path):
-    from f1_data_pipeline_spark.operators import sinks as S
-
-    path = str(tmp_path / "versioned")
-    v1 = S.write_versioned(spark.range(0, 10), path)
-    v2 = S.write_versioned(spark.range(0, 20), path)
-    v3 = S.write_versioned(spark.range(0, 5), path)
-    assert (v1, v2, v3) == (1, 2, 3)
-
-    assert S.read_versioned(spark, path).count() == 5          # latest
-    assert S.read_versioned(spark, path, version=2).count() == 20  # time travel
-
-    S.rollback(path, 2)
-    assert S.read_versioned(spark, path).count() == 20
-
-    removed = S.vacuum(path, keep_last=2)
-    assert removed == [1]
-    assert S.read_versioned(spark, path).count() == 20  # pointer target survives
-
-
-def test_partition_scoped_merge_rewrites_only_touched(spark, tmp_path):
-    """MERGE on one day's batch must not rewrite other days' files."""
-    import glob
-    import os
-
-    import pyspark.sql.functions as F
-
-    from f1_data_pipeline_spark.operators import sinks as S
-
-    path = str(tmp_path / "facts")
-    base = spark.createDataFrame(
-        [(i, f"2024-01-0{1 + i % 3}", float(i)) for i in range(30)],
-        "id long, day string, v double",
-    )
-    base.write.mode("overwrite").partitionBy("day").parquet(path)
-    untouched_files = {
-        f: os.path.getmtime(f)
-        for f in glob.glob(path + "/day=2024-01-02/*.parquet")
-        + glob.glob(path + "/day=2024-01-03/*.parquet")
-    }
-
-    updates = spark.createDataFrame(
-        [(0, "2024-01-01", 100.0), (999, "2024-01-01", 9.5)],
-        "id long, day string, v double",
-    )
-    S.merge_upsert_partitioned(spark, updates, path, keys=["id"], partition_col="day")
-
-    after = spark.read.parquet(path)
-    assert after.count() == 31  # one insert
-    assert after.filter(F.col("id") == 0).collect()[0]["v"] == 100.0  # update won
-    # other partitions' files: identical paths and mtimes — never rewritten
-    now_files = {
-        f: os.path.getmtime(f)
-        for f in glob.glob(path + "/day=2024-01-02/*.parquet")
-        + glob.glob(path + "/day=2024-01-03/*.parquet")
-    }
-    assert now_files == untouched_files
-
-
 def test_merge_upsert_frames_dedups_update_batch(spark):
     """Two update rows sharing a key must collapse to ONE merged row (a
     foreachBatch micro-batch can carry several updates per key); default
@@ -231,71 +172,6 @@ def test_merge_upsert_frames_dedups_update_batch(spark):
         existing, updates, ["id"], updates_order=[F.asc("seq")]
     )
     assert {tuple(r) for r in by_seq_asc.collect()} == {(1, "a", 1), (2, "new", 1)}
-
-
-def test_partitioned_merge_null_partition_falls_back(spark, tmp_path):
-    """NULL partition values can't be partition-pruned (isin never matches
-    NULL) — the batch must fall back to a full merge, losing no rows."""
-    from f1_data_pipeline_spark.operators import sinks as S
-
-    path = str(tmp_path / "facts_null")
-    base = spark.createDataFrame(
-        [(1, "2024-01-01", 1.0), (2, None, 2.0), (3, None, 3.0)],
-        "id long, day string, v double",
-    )
-    base.write.mode("overwrite").partitionBy("day").parquet(path)
-
-    updates = spark.createDataFrame(
-        [(2, None, 20.0), (4, "2024-01-01", 4.0)], "id long, day string, v double"
-    )
-    S.merge_upsert_partitioned(spark, updates, path, keys=["id"], partition_col="day")
-
-    # cast day back to string: parquet partition-type inference reads the
-    # directory values as DATE regardless of what was written
-    rows = {
-        (r["id"], r["day"], r["v"])
-        for r in spark.read.parquet(path)
-        .withColumn("day", F.col("day").cast("string"))
-        .collect()
-    }
-    assert rows == {
-        (1, "2024-01-01", 1.0),
-        (2, None, 20.0),      # NULL-partition row updated, not lost
-        (3, None, 3.0),       # untouched NULL-partition row preserved
-        (4, "2024-01-01", 4.0),
-    }
-
-
-def test_partitioned_merge_rejects_moved_key(spark, tmp_path):
-    """An update whose key already lives under a DIFFERENT partition would
-    insert a duplicate row — partition-scoped MERGE must refuse."""
-    from f1_data_pipeline_spark.operators import sinks as S
-
-    path = str(tmp_path / "facts_moved")
-    spark.createDataFrame(
-        [(1, "2024-01-01", 1.0)], "id long, day string, v double"
-    ).write.mode("overwrite").partitionBy("day").parquet(path)
-
-    moved = spark.createDataFrame(
-        [(1, "2024-01-02", 9.0)], "id long, day string, v double"
-    )
-    with pytest.raises(ValueError, match="other day partitions"):
-        S.merge_upsert_partitioned(spark, moved, path, keys=["id"], partition_col="day")
-
-
-def test_partitioned_merge_rejects_key_spanning_partitions(spark, tmp_path):
-    from f1_data_pipeline_spark.operators import sinks as S
-
-    path = str(tmp_path / "facts_span")
-    spark.createDataFrame(
-        [(9, "2024-01-01", 0.0)], "id long, day string, v double"
-    ).write.mode("overwrite").partitionBy("day").parquet(path)
-    bad = spark.createDataFrame(
-        [(1, "2024-01-01", 1.0), (1, "2024-01-02", 2.0)],
-        "id long, day string, v double",
-    )
-    with pytest.raises(ValueError, match="functionally determine"):
-        S.merge_upsert_partitioned(spark, bad, path, keys=["id"], partition_col="day")
 
 
 def test_append_atomic_crash_never_exposes_partial_state(spark, wh, monkeypatch):
@@ -648,7 +524,7 @@ def test_manifest_concurrent_writer_loses_race_cleanly(spark, tmp_path):
 
 def test_manifest_time_travel_and_vacuum_window(spark, tmp_path):
     """Every commit is a retained snapshot until vacuumed: historical
-    versions read back exactly; vacuum(keep_last) ends the older
+    versions read back exactly; vacuum_manifest(keep_last) ends the older
     versions' time-travel window but never the kept ones."""
     path = str(tmp_path / "man_tt")
     for v in (1.0, 2.0, 3.0):
@@ -807,21 +683,6 @@ def test_manifest_read_pushes_filters_through_stored_schema(spark, tmp_path):
     pushed = " ".join(pushed_filters(df))
     assert "v" in pushed, pushed
     assert df.count() == 14
-
-
-def test_partitioned_merge_refuses_schema_evolution(spark, tmp_path):
-    """Hive-layout partition-scoped MERGE must refuse new columns with an
-    actionable error (mixed-schema partition files break plain readers) —
-    not suggest a parameter it doesn't have."""
-    path = str(tmp_path / "facts_evo")
-    spark.createDataFrame(
-        [(1, "d1", 1.0)], "id long, day string, v double"
-    ).write.mode("overwrite").partitionBy("day").parquet(path)
-    wider = spark.createDataFrame(
-        [(1, "d1", 2.0, "en")], "id long, day string, v double, lang string"
-    )
-    with pytest.raises(ValueError, match="manifest table"):
-        sinks.merge_upsert_partitioned(spark, wider, path, ["id"], partition_col="day")
 
 
 def test_manifest_vacuum_retention_protects_inflight_writes(spark, tmp_path):
@@ -1169,59 +1030,6 @@ def test_manifest_schema_widening_old_prefixes_still_read(spark, tmp_path):
             spark, stringy, path, ["id"], partition_col="day",
             schema_evolution=True,
         )
-
-
-def test_partitioned_merge_crash_mid_swap_per_partition_consistent(
-    spark, tmp_path, monkeypatch
-):
-    """Pin the documented cross-partition contract of the Hive-layout
-    merge: a crash mid-swap-loop leaves each partition wholly old or
-    wholly new (mixed ACROSS partitions, torn in none), and re-running
-    the idempotent merge converges to the fully-new state."""
-    import os as _os
-
-    path = str(tmp_path / "facts_crash")
-    base = spark.createDataFrame(
-        [(1, "d1", 1.0), (2, "d1", 2.0), (3, "d2", 3.0), (4, "d2", 4.0)],
-        "id long, day string, v double",
-    )
-    sinks.merge_upsert_partitioned(spark, base, path, ["id"], partition_col="day")
-    updates = spark.createDataFrame(
-        [(1, "d1", 100.0), (3, "d2", 300.0)], "id long, day string, v double"
-    )
-
-    real_rename = _os.rename
-    swap_renames = {"n": 0}
-
-    def crashing_rename(src, dst):
-        if ".__merge__" in str(src) or ".__old__" in str(dst):
-            swap_renames["n"] += 1
-            if swap_renames["n"] >= 3:  # first partition fully swapped (2
-                raise OSError("simulated crash mid swap loop")  # renames)
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(sinks.os, "rename", crashing_rename)
-    with pytest.raises(OSError, match="simulated crash"):
-        sinks.merge_upsert_partitioned(
-            spark, updates, path, ["id"], partition_col="day"
-        )
-    monkeypatch.undo()
-
-    rows = {(r["id"], r["day"], r["v"]) for r in spark.read.parquet(path).collect()}
-    # exactly ONE of the two touched partitions carries the update; the
-    # other is wholly old — never a torn or half-written partition
-    d1_new = (1, "d1", 100.0) in rows
-    d2_new = (3, "d2", 300.0) in rows
-    assert d1_new != d2_new, rows
-    assert (2, "d1", 2.0) in rows and (4, "d2", 4.0) in rows
-    assert len(rows) == 4
-
-    # idempotent re-run converges
-    sinks.merge_upsert_partitioned(spark, updates, path, ["id"], partition_col="day")
-    rows2 = {(r["id"], r["day"], r["v"]) for r in spark.read.parquet(path).collect()}
-    assert rows2 == {
-        (1, "d1", 100.0), (2, "d1", 2.0), (3, "d2", 300.0), (4, "d2", 4.0)
-    }
 
 
 # ---------------------------------------------------------------------------

@@ -303,9 +303,9 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
 
 def test_merge_sink_partition_scoped_and_manifest_commits(spark, tmp_path):
     """Bounded-rewrite streaming MERGE: one micro-batch per day-file, each
-    committed partition-scoped (rename mode) or via one manifest flip per
-    batch (manifest mode) — both converge to the same rows as a full
-    batch MERGE, and the manifest version count proves per-batch commits."""
+    committed via one manifest flip per batch — it converges to the same
+    rows as a full batch MERGE, and the manifest version count proves
+    per-batch commits. Manifest is the only partitioned commit mode."""
     import datetime as dt
 
     from f1_data_pipeline_spark.operators import sinks
@@ -349,16 +349,13 @@ def test_merge_sink_partition_scoped_and_manifest_commits(spark, tmp_path):
         q.awaitTermination(300)
         q.stop()
 
-    t_rename = str(tmp_path / "t_rename")
-    run(t_rename, "ck_rename", partition_col="day")
-    got = {
-        (r["event_id"], str(r["day"]), r["value"])
-        for r in spark.read.parquet(t_rename).collect()
-    }
-    assert got == expected
+    retired = "rename"  # the removed directory-swap commit mode
+    with pytest.raises(ValueError, match="unknown commit mode"):
+        run(str(tmp_path / "t_rename"), "ck_rename", partition_col="day",
+            commit=retired)
 
     t_man = str(tmp_path / "t_manifest")
-    run(t_man, "ck_manifest", partition_col="day", commit="manifest")
+    run(t_man, "ck_manifest", partition_col="day")
     got_m = {
         (r["event_id"], r["day"], r["value"])
         for r in sinks.read_manifest_table(spark, t_man).collect()

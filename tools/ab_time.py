@@ -13,6 +13,7 @@ execution only shows the initial plan, which hides runtime broadcast reuse.
 
 from __future__ import annotations
 
+import argparse
 import os
 import statistics
 import sys
@@ -21,23 +22,17 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> None:
-    sf_dir = sys.argv[1]
-    names = sys.argv[2].split(",")
-    reps = int(sys.argv[3]) if len(sys.argv) > 3 and sys.argv[3].isdigit() else 5
-    plan_out = None
-    if "--plan" in sys.argv:
-        plan_out = sys.argv[sys.argv.index("--plan") + 1]
+USAGE = "python tools/ab_time.py <sf_dir> <query>[,query...] [reps] [--plan out.txt]"
 
-    from tools.capture_plans import shape_summary
 
+def _calls() -> dict:
+    """Timeable names: the query registry plus a few non-registry variants."""
     from f1_data_pipeline_spark import (
         queries_relational,
         queries_streaming,
         queries_text,
     )
     from f1_data_pipeline_spark.queries import QUERIES
-    from f1_data_pipeline_spark.session import get_spark
 
     calls = dict(QUERIES)
     calls["dedup_first"] = queries_relational.q_dedup_first
@@ -59,6 +54,35 @@ def main() -> None:
         return brute_force_topk_arrow(emb.filter(F.col("vec_id") < 20), emb, k=5)
 
     calls["topk_similarity_arrow"] = _topk_arrow
+    return calls
+
+
+def parse_args(argv: list[str] | None, calls: dict) -> argparse.Namespace:
+    """Parse the command line; a bad one prints the usage line and exits 2."""
+    ap = argparse.ArgumentParser(prog="ab_time.py", usage=USAGE)
+    ap.add_argument("sf_dir")
+    ap.add_argument("queries", type=lambda v: v.split(","))
+    ap.add_argument("reps", nargs="?", type=int, default=5)
+    ap.add_argument("--plan", dest="plan_out", metavar="out.txt")
+    args = ap.parse_intermixed_args(argv)
+    unknown = [q for q in args.queries if q not in calls]
+    if unknown:
+        ap.error(
+            f"unknown query {', '.join(unknown)} (known: {', '.join(sorted(calls))})"
+        )
+    return args
+
+
+def main(argv: list[str] | None = None) -> None:
+    calls = _calls()
+    args = parse_args(argv, calls)
+    sf_dir, names, reps, plan_out = (
+        args.sf_dir, args.queries, args.reps, args.plan_out
+    )
+
+    from tools.capture_plans import shape_summary
+
+    from f1_data_pipeline_spark.session import get_spark
 
     spark = get_spark("ab_time")
     spark.range(1).count()
