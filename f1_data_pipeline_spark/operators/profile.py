@@ -69,10 +69,11 @@ def profile_long(
             v = F.col(c)
             if types.get(c) not in ("double", "float"):
                 return F.size(F.collect_set(v))
-            # collect_set compares floats with primitive == (NaN never
-            # equals itself, -0.0 equals 0.0 but keeps its bit pattern),
-            # while count_distinct groups NaNs together and merges -0.0
-            # into 0.0. Normalize: -0.0 + 0.0 == 0.0 (IEEE 754), NaNs
+            # collect_set dedupes floats by bit pattern: -0.0 and 0.0 stay
+            # two elements, and NaNs are one element only where their bits
+            # were canonicalised. count_distinct's grouping normalises both
+            # (-0.0 into 0.0, every NaN into one canonical NaN). Normalize
+            # here the same way: -0.0 + 0.0 == 0.0 (IEEE 754), NaNs
             # leave the set entirely (→ null, which collect_set drops)
             # and come back as one max(isnan) flag (NULL over zero rows,
             # hence the coalesce).

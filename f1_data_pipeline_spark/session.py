@@ -106,6 +106,13 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Generated-code cache (static, so builder-only). The default cap of
+        # 100 is split by Guava across 4 segments of 25 LRU entries each; one
+        # pass of a five-query workload compiles about 90 distinct classes,
+        # so some segment overflows and every pass recompiled 20-30 classes
+        # and ran its hot loops in fresh, un-JITted code. 1000 holds about
+        # ten such working sets.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -6,9 +6,19 @@ Here all tables are columnar Parquet read by Spark's vectorized reader, so
 predicate pushdown and column pruning come from Catalyst — callers should
 `.select`/`.filter` on the returned DataFrame and let the optimizer push.
 
-Scale note: at 100 TB these reads become directory-partitioned datasets
-(facts partitioned by date/season); the API is path-based so that swap is
-transparent to every operator.
+Single-file split rule: Spark splits a parquet scan by row group, so a
+single file written as one row group (every testdata and benchmark table)
+scans in one task however many cores there are. `load_table` spreads such a
+file over the cores with `repartition(defaultParallelism, <first column>)`
+when the path is one file of at least `spark.sql.files.openCostInBytes`
+(Spark's own not-worth-splitting size) whose footer, read by pyarrow on the
+driver, holds fewer row groups than `defaultParallelism`. The first column
+is the table's key. Hash partitioning, not round-robin: round-robin adds a
+local sort before the exchange, and hashing on the key lets a later
+groupBy or join on that key reuse the partitioning. Only the key is hashed,
+so column pruning still reaches the scan; the explicit count keeps AQE from
+coalescing the exchange back onto one task. Directories and files that
+already split into enough row groups are read as they are.
 """
 
 from __future__ import annotations
@@ -42,8 +52,23 @@ def _ensure_nanos_conf(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
+def _split_count(spark: SparkSession, path: str) -> int:
+    """Partitions to spread the single file `path` over, 0 to read it as
+    it is (the split rule in the module docstring)."""
+    if not os.path.isfile(path):
+        return 0
+    conf = spark._jsparkSession.sessionState().conf()
+    if os.path.getsize(path) < conf.filesOpenCostInBytes():
+        return 0
+    import pyarrow.parquet as pq
+
+    cores = spark.sparkContext.defaultParallelism
+    return cores if pq.read_metadata(path).num_row_groups < cores else 0
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one table from `sf_dir`, normalizing ns timestamps to µs."""
+    """Read one table from `sf_dir`, normalizing ns timestamps to µs and
+    spreading a single-row-group file over the cores."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     nano_cols = NANO_TS_COLUMNS.get(name, ())
     if nano_cols:
@@ -72,6 +97,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "load_table normalizes LongType (legacy nanos) and "
                 "TimestampNTZType (µs) — add a branch for this encoding"
             )
+    n_parts = _split_count(spark, path)
+    if n_parts:
+        df = df.repartition(n_parts, df.columns[0])
     return df
 
 

@@ -34,3 +34,25 @@ def test_get_spark_same_thread_reuses_and_honors_explicit_request(spark):
         assert s2.conf.get("spark.sql.shuffle.partitions") == "7"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_codegen_cache_holds_a_workload_pass(spark, sf_dir):
+    """One pass of the benchmark's five analytics queries compiles about 90
+    classes. With Spark's default cache cap (100 entries in 4 LRU segments of
+    25) a segment overflows and the next pass recompiles; get_spark's cap
+    keeps the whole pass cached."""
+    from f1_data_pipeline_spark.queries import QUERIES
+
+    keys = ("standings_recompute", "pricing_summary", "top_revenue_orders",
+            "window_sums", "range_join")
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def run_pass():
+        before = compiled.getCount()
+        for k in keys:
+            QUERIES[k](spark, sf_dir).collect()
+        return compiled.getCount() - before
+
+    run_pass()  # compiles what earlier tests have not
+    assert run_pass() == 0

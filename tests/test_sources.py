@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import re
 import zipfile
 
 import pytest
@@ -344,3 +345,104 @@ def test_load_table_raises_on_unexpected_ts_encoding(spark, tmp_path):
     ).write.parquet(str(sf / "events.parquet"))
     with pytest.raises(TypeError, match="unexpected surfaced type"):
         load_table(spark, str(sf), "events")
+
+
+# --- single-file split rule (load_table) ------------------------------------------
+
+# below sf0.001 `lineitem` (117 KB) and `documents` (64 KB), above `orders` (36 KB)
+LOW_OPEN_COST = 60 * 1024
+
+
+def _plan(df) -> str:
+    """The physical plan AQE starts from; builds it without running the query."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture()
+def low_open_cost(spark):
+    """Lower Spark's not-worth-splitting size so the split rule applies to
+    sf0.001's one-row-group `lineitem`, and print scan schemas in full."""
+    confs = {
+        "spark.sql.files.openCostInBytes": str(LOW_OPEN_COST),
+        "spark.sql.maxMetadataStringLength": "10000",
+    }
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    yield
+    for k in confs:
+        spark.conf.unset(k)
+
+
+def test_load_table_spreads_single_row_group_file(spark, sf_dir, low_open_cost):
+    from f1_data_pipeline_spark.queries import QUERIES
+
+    n = spark.sparkContext.defaultParallelism
+    plan = _plan(QUERIES["pricing_summary"](spark, sf_dir))
+    spreads = [ln for ln in plan.splitlines() if "REPARTITION_BY_NUM" in ln]
+    assert len(spreads) == 1, plan
+    assert re.search(rf"Exchange hashpartitioning\(l_orderkey#\d+L, {n}\), "
+                     "REPARTITION_BY_NUM", spreads[0]), spreads[0]
+    # column pruning survives the exchange
+    (read_schema,) = re.findall(r"lineitem\.parquet\].*ReadSchema: (struct<[^>]*>)", plan)
+    assert "l_quantity" in read_schema and "l_comment" not in read_schema
+
+
+def test_load_table_leaves_other_layouts_unsplit(spark, sf_dir, low_open_cost, tmp_path):
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from f1_data_pipeline_spark.sources.tables import load_table
+
+    # a file below the threshold
+    assert os.path.getsize(f"{sf_dir}/orders.parquet") < LOW_OPEN_COST
+    assert "Exchange" not in _plan(load_table(spark, sf_dir, "orders"))
+    # a parquet directory
+    as_dir = tmp_path / "dir"
+    (as_dir / "lineitem.parquet").mkdir(parents=True)
+    shutil.copy(f"{sf_dir}/lineitem.parquet", as_dir / "lineitem.parquet" / "part-0.parquet")
+    assert "Exchange" not in _plan(load_table(spark, str(as_dir), "lineitem"))
+    # a file that already splits into one row group per core
+    n = spark.sparkContext.defaultParallelism
+    t = pq.read_table(f"{sf_dir}/lineitem.parquet")
+    groups = tmp_path / "groups"
+    groups.mkdir()
+    pq.write_table(t, groups / "lineitem.parquet", row_group_size=-(-t.num_rows // n))
+    assert pq.read_metadata(groups / "lineitem.parquet").num_row_groups == n
+    assert os.path.getsize(groups / "lineitem.parquet") >= LOW_OPEN_COST
+    assert "Exchange" not in _plan(load_table(spark, str(groups), "lineitem"))
+
+
+@pytest.mark.parametrize(
+    "key", ["pricing_summary", "standings_recompute", "top_revenue_orders"]
+)
+def test_split_and_unsplit_scans_give_same_rows(spark, sf_dir, key):
+    from f1_data_pipeline_spark.queries import QUERIES
+
+    def rows():
+        df = QUERIES[key](spark, sf_dir)
+        return df, sorted((tuple(r) for r in df.collect()), key=repr)
+
+    unsplit_df, unsplit = rows()
+    assert "REPARTITION_BY_NUM" not in _plan(unsplit_df)
+    spark.conf.set("spark.sql.files.openCostInBytes", str(LOW_OPEN_COST))
+    try:
+        split_df, split = rows()
+    finally:
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+    assert "REPARTITION_BY_NUM" in _plan(split_df)
+    assert unsplit and split == unsplit
+
+
+def test_split_documents_keep_one_exchange_under_positional_ngrams(
+    spark, sf_dir, low_open_cost
+):
+    """The shingler's own spread on the id collapses into the split's."""
+    from f1_data_pipeline_spark.functions.text import positional_ngrams
+    from f1_data_pipeline_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    assert "REPARTITION_BY_NUM" in _plan(docs)
+    plan = _plan(positional_ngrams(docs, "doc_id", "text", 3))
+    assert plan.count("Exchange") == 1, plan
