@@ -115,13 +115,14 @@ def scd2_merge(
         F.lit(True).alias("is_current"),
     ]
     if read_manifest(path) is None:
-        base = batch.select(*out_cols)
-        merge_upsert_manifest(
-            spark, base, path, keys=[*keys, "valid_from"],
+        # the batch holds one row per key, so the upsert's count of
+        # distinct keys applied is its row count
+        new = merge_upsert_manifest(
+            spark, batch.select(*out_cols), path, keys=[*keys, "valid_from"],
             partition_col=partition_col, app_metadata=app_metadata,
         )
         return {
-            "new": base.count(), "changed": 0, "corrected": 0,
+            "new": new, "changed": 0, "corrected": 0,
             "unchanged": 0, "late_skipped": 0,
         }
 

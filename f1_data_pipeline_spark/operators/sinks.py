@@ -3302,33 +3302,34 @@ def merge_into_manifest(
                 "assignments — there is no source row to take columns from"
             )
 
+    # One grouping of the source by key answers three questions in one job:
+    # rows per key, partition values per key, and (when every key has one)
+    # the source's partition values — structs, so a NULL partition value
+    # survives collect_set.
+    src_has_part = psrc in source.columns
+    src_keyed = apply_transform(pt, source) if src_has_part else source
+    per_key = [F.count("*").alias("__n")]
+    over_keys = [F.max("__n").alias("rows")]
+    if src_has_part:
+        per_key += [
+            F.countDistinct(F.struct(pcol_w)).alias("__np"),
+            F.first(F.struct(pcol_w)).alias("__p"),
+        ]
+        over_keys += [F.max("__np").alias("parts"), F.collect_set("__p").alias("vals")]
+    shape = src_keyed.groupBy(*keys).agg(*per_key).agg(*over_keys).first()
     # at most one source row per key (Delta's ambiguous-merge error)
-    if source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count():
+    if (shape["rows"] or 0) > 1:
         raise ValueError(
             f"source has multiple rows per {keys} key — MERGE matches are "
             "ambiguous; pre-aggregate the source to one row per key"
         )
-    src_has_part = psrc in source.columns
-    src_keyed = apply_transform(pt, source) if src_has_part else source
-    src_parts = (
-        [r[0] for r in src_keyed.select(pcol_w).distinct().collect()]
-        if src_has_part
-        else []
-    )
     if not_matched and not src_has_part:
         raise ValueError(
             f"source lacks the partition source column {psrc!r} — "
             "INSERT clauses cannot place rows"
         )
-    spanning = (
-        src_keyed.groupBy(*keys)
-        .agg(F.countDistinct(F.struct(pcol_w)).alias("__np"))
-        .filter(F.col("__np") > 1)
-        .limit(1)
-        .count()
-        if src_has_part
-        else 0
-    )
+    spanning = src_has_part and (shape["parts"] or 0) > 1
+    src_parts = [r[0] for r in shape["vals"]] if src_has_part else []
     if spanning:
         raise ValueError(
             f"source maps one {keys} key to multiple {partition_col} "

@@ -66,6 +66,40 @@ def _split_count(spark: SparkSession, path: str) -> int:
     return cores if pq.read_metadata(path).num_row_groups < cores else 0
 
 
+# Session confs that change the schema Spark infers from a parquet footer.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# Inferred schemas by (path, size, mtime, inference confs). Spark infers a
+# parquet schema with a one-task job on every read; a query builds its frames
+# through load_table, so without this each table read cost a job launch
+# before the query's own jobs. Passing the schema read last time skips it.
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)`, inferring the schema of a single file
+    once per file version and session setting. A directory is read as it
+    is: rewriting a part file in place would not show in its stat."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (
+        os.path.abspath(path), st.st_size, st.st_mtime_ns,
+        tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table from `sf_dir`, normalizing ns timestamps to µs and
     spreading a single-row-group file over the cores."""
@@ -73,7 +107,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     nano_cols = NANO_TS_COLUMNS.get(name, ())
     if nano_cols:
         _ensure_nanos_conf(spark)
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     for c in nano_cols:
         dt = df.schema[c].dataType
         if isinstance(dt, T.LongType):

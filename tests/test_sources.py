@@ -446,3 +446,42 @@ def test_split_documents_keep_one_exchange_under_positional_ngrams(
     assert "REPARTITION_BY_NUM" in _plan(docs)
     plan = _plan(positional_ngrams(docs, "doc_id", "text", 3))
     assert plan.count("Exchange") == 1, plan
+
+
+# --- schema inference once per file (load_table) ----------------------------------
+
+
+def _jobs(spark) -> int:
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_load_table_infers_a_file_schema_once(spark, sf_dir):
+    from f1_data_pipeline_spark.sources.tables import load_table
+
+    first = load_table(spark, sf_dir, "events")
+    before = _jobs(spark)
+    again = load_table(spark, sf_dir, "events")
+    assert _jobs(spark) == before  # no schema-inference job
+    assert again.schema == first.schema
+    assert again.count() == first.count()
+
+
+def test_load_table_schema_follows_a_rewritten_file(spark, tmp_path):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from f1_data_pipeline_spark.sources.tables import load_table
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": pa.array([1, 2], pa.int64())}), path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+    stat = os.stat(path)
+    pq.write_table(pa.table({"r_regionkey": pa.array([1], pa.int64()),
+                             "r_name": pa.array(["x"])}), path)
+    # a rewrite within the clock's resolution still differs in size
+    assert os.stat(path).st_size != stat.st_size
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert [tuple(r) for r in df.collect()] == [(1, "x")]
